@@ -58,7 +58,7 @@ NEAR_DUP_MAX_BUCKET = 1000
 #: Upper bound on rows per GEMM sub-block in d6 — caps the pandas frame an
 #: executor materializes for a hot label (4096 x 64 doubles ~= 2 MB).
 MAX_GEMM_BLOCK = 4096
-#: Hard cap on min-label-propagation rounds in d7; real dedup graphs are
+#: Hard cap on min-label-propagation rounds in d7/d12; real dedup graphs are
 #: shallow (2-4 rounds) — a pathological chain stops here with a warning.
 MAX_CC_ROUNDS = 50
 
@@ -625,9 +625,36 @@ def d6_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # yet A, B, C must dedup to ONE canonical doc.
 #
 # Components via iterative min-label propagation over the pair graph with a
-# driver-side convergence check (a scalar count per round — metadata, not
+# driver-side convergence check (a scalar count per check — metadata, not
 # row data; clusters are shallow so this converges in ~2-4 rounds). The
 # oracle computes the same fixpoint with a recursive CTE.
+def _pair_components(pairs: DataFrame, ids: DataFrame, n_ids: int) -> DataFrame:
+    """(vid, comp) — the min-label connected-component fixpoint of the
+    (a_id, b_id) pair graph over the one-column id universe ``ids``
+    (isolated ids keep their own label). Shared by d7 (near-dup text
+    pairs) and d12 (near-dup embedding pairs). MAX_CC_ROUNDS bounds a
+    pathological chain."""
+    from flink_neo4j_spark.tuning import iter_kernel, min_supersteps
+
+    und = _materialized(
+        pairs.unionAll(
+            pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
+        )
+    )
+    vid = F.col(ids.columns[0])
+    with iter_kernel(pairs.sparkSession, n_ids) as k:
+        return min_supersteps(
+            k,
+            ids.select(vid.alias("vid"), vid.alias("comp")),
+            lambda c: und.join(k.bc(c.withColumnRenamed("vid", "a_id")), "a_id")
+            .select(F.col("b_id").alias("vid"), "comp"),
+            ["vid"],
+            "comp",
+            MAX_CC_ROUNDS,
+            until_stable=True,
+        )
+
+
 def _minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vid, comp) — the min-label connected-component fixpoint over the
     memoized near-dup pair table. Session-memoized like the pair table
@@ -636,58 +663,15 @@ def _minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative loop is the dominant cost of all three — one fixpoint per
     session, the first consumer pays it (GDS analogue: one ``gds.wcc``
     materialization read by several downstream queries)."""
+    from flink_neo4j_spark.tuning import memoized_count
 
     def build() -> DataFrame:
         pairs = _minhash_pairs(spark, sf_dir).select("a_id", "b_id")
-        und = _materialized(
-            pairs.unionAll(
-                pairs.select(
-                    F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")
-                )
-            )
-        )
         docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        from flink_neo4j_spark.tuning import iter_kernel, memoized_count
-
         n_docs = memoized_count(
             spark, ("documents", os.path.abspath(sf_dir)), docs
         )
-        with iter_kernel(spark, n_docs) as k:
-            comp = docs.select(
-                F.col("doc_id").alias("vid"), F.col("doc_id").alias("comp")
-            )
-            # Convergence is checked every 2nd round only: the check is a
-            # full comparison join + count() job, and dedup graphs converge
-            # in 2-4 rounds, so halving the check cadence saves a job per
-            # round at the cost of at most one redundant propagation.
-            # MAX_CC_ROUNDS bounds a pathological chain (the fixpoint is
-            # monotone, so stopping early yields a coarser-but-valid
-            # partition rather than garbage). Checkpoints are lazy: the
-            # convergence count (or the next round's check) is the
-            # materializing action.
-            for rnd in range(1, MAX_CC_ROUNDS + 1):
-                msgs = und.join(
-                    k.bc(comp.withColumnRenamed("vid", "a_id")), "a_id"
-                ).select(F.col("b_id").alias("vid"), "comp")
-                new_comp = (
-                    comp.unionByName(msgs)
-                    .groupBy("vid")
-                    .agg(F.min("comp").alias("comp"))
-                    .localCheckpoint(eager=False)
-                )
-                if rnd % 2 == 0 or rnd == MAX_CC_ROUNDS:
-                    changed = (
-                        new_comp.alias("n")
-                        .join(k.bc(comp.alias("o")), "vid")
-                        .filter(F.col("n.comp") != F.col("o.comp"))
-                        .count()
-                    )
-                    comp = new_comp
-                    if changed == 0:
-                        break
-                else:
-                    comp = new_comp
-        return comp
+        return _pair_components(pairs, docs, n_docs)
 
     key = ("minhash_cc", os.path.abspath(sf_dir))
     return session_memo(spark, key, build)
@@ -741,43 +725,13 @@ def d12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos") >= SEM_COS_THRESHOLD)
         .select("a_id", "b_id")
     )
-    und = _materialized(
-        pairs.unionAll(
-            pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
-        )
-    )
-    vids = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    from flink_neo4j_spark.tuning import iter_kernel, memoized_count
+    from flink_neo4j_spark.tuning import memoized_count
 
+    vids = load_table(spark, sf_dir, "embeddings").select("vec_id")
     n_vecs = memoized_count(
         spark, ("embeddings", os.path.abspath(sf_dir)), vids
     )
-    with iter_kernel(spark, n_vecs) as k:
-        comp = vids.select(
-            F.col("vec_id").alias("vid"), F.col("vec_id").alias("comp")
-        )
-        for rnd in range(1, MAX_CC_ROUNDS + 1):
-            msgs = und.join(
-                k.bc(comp.withColumnRenamed("vid", "a_id")), "a_id"
-            ).select(F.col("b_id").alias("vid"), "comp")
-            new_comp = (
-                comp.unionByName(msgs)
-                .groupBy("vid")
-                .agg(F.min("comp").alias("comp"))
-                .localCheckpoint(eager=False)
-            )
-            if rnd % 2 == 0 or rnd == MAX_CC_ROUNDS:
-                changed = (
-                    new_comp.alias("n")
-                    .join(k.bc(comp.alias("o")), "vid")
-                    .filter(F.col("n.comp") != F.col("o.comp"))
-                    .count()
-                )
-                comp = new_comp
-                if changed == 0:
-                    break
-            else:
-                comp = new_comp
+    comp = _pair_components(pairs, vids, n_vecs)
     return comp.select(
         F.col("vid").alias("vec_id"),
         "comp",

@@ -30,12 +30,28 @@ with the kernel sizing. Result values are unaffected — partitioning only
 changes task granularity (callers must not use it around float
 aggregations whose unrounded values are hash-compared; every current
 caller aggregates integers, mins, or exactly-representable dyadic sums).
+
+``min_supersteps`` is the one superstep loop for the kernels whose round
+is "send messages, keep the minimum per key" (GraphX's Pregel operator
+with a ``min`` merge): connected components, BFS/SSSP, harmonic BFS,
+both SCC sweeps and the dedup components. It owns their single
+checkpoint rule — a lazy ``localCheckpoint`` every round, an eager one
+on the last round of a fixed-round loop. The state appears on both
+sides of each round's union, so an un-truncated plan doubles every
+round; a lazy checkpoint launches no job of its own (the next round's
+use of the state materializes it). Measured on a 4-core host at sf0.1
+(min of 5 warm calls), the per-round rule took g55 (SCC) from 3.8 s to
+2.0 s against eager checkpoints every 8th round, and the SCC unit-test
+fixtures from 11-18 s to 4-6 s each. The to-fixpoint variant tests
+convergence every 2nd round; testing every 3rd instead measured 10-15%
+slower on d7/d12 (one more round past the fixpoint).
 """
 
 from __future__ import annotations
 
 import math
 import threading
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -160,6 +176,53 @@ def iter_kernel(
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_shuf)
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+
+def min_supersteps(
+    k: IterKernel,
+    state: DataFrame,
+    send: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    value: str,
+    rounds: int,
+    until_stable: bool = False,
+) -> DataFrame:
+    """Run ``rounds`` min-aggregation supersteps from ``state``: each round
+    is ``state ∪ send(state)``, grouped by ``keys``, keeping ``min(value)``.
+    ``send`` maps the current state to messages with the state's columns
+    (typically a join against the edge table through ``k.bc``).
+
+    Fixed-round (default): every round's state is lazily checkpointed and
+    the last one eagerly, so the whole loop executes inside the caller's
+    kernel scope; ``rounds == 0`` returns the eagerly checkpointed input.
+    ``until_stable``: every 2nd round (and the last) counts the keys whose
+    value changed in that round and stops at zero — ``rounds`` is then a
+    budget; since values only decrease toward the fixpoint, exhausting it
+    leaves a partial state (components over-split, never merged wrongly).
+    The count is the materializing action."""
+    from pyspark.sql import functions as F
+
+    if rounds == 0:
+        return state.localCheckpoint()
+    for rnd in range(1, rounds + 1):
+        last = rnd == rounds
+        nxt = (
+            state.unionByName(send(state))
+            .groupBy(*keys)
+            .agg(F.min(value).alias(value))
+            .localCheckpoint(eager=last and not until_stable)
+        )
+        if until_stable and (rnd % 2 == 0 or last):
+            changed = (
+                nxt.alias("n")
+                .join(k.bc(state.alias("o")), keys)
+                .filter(F.col(f"n.{value}") != F.col(f"o.{value}"))
+                .count()
+            )
+            if changed == 0:
+                return nxt
+        state = nxt
+    return state
 
 
 def memoized_count(spark: SparkSession, key: tuple, df: DataFrame) -> int:

@@ -15,37 +15,72 @@ def _graph(spark, edges, n):
             [(i, "N", f"v{i}") for i in range(n)], "id long, label string, name string"
         ),
         spark.createDataFrame(
-            [(i, s, d, "E") for i, (s, d) in enumerate(edges)],
-            "id long, src long, dst long, rel_type string",
+            [(i, s, d, "E", 1) for i, (s, d) in enumerate(edges)],
+            "id long, src long, dst long, rel_type string, w long",
         ),
     )
 
 
-def _cc(g, iterations=6):
-    undirected = g.edges.select("src", "dst").unionAll(
-        g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    comp = g.vertices.select(F.col("id").alias("vid"), F.col("id").alias("comp"))
-    for _ in range(iterations):
-        msgs = undirected.join(comp.withColumnRenamed("vid", "src"), "src").select(
-            F.col("dst").alias("vid"), "comp"
-        )
-        comp = (
-            comp.unionByName(msgs).groupBy("vid").agg(F.min("comp").alias("comp"))
-        )
+def _cc(spark, monkeypatch, tmp_path, edges, n):
+    # g3 itself, over a hand-built graph: tmp_path keys its session memos
+    # (edge count, undirected edge table) apart from every other graph
+    from flink_neo4j_spark.operators import graph_algos
+
+    g = _graph(spark, edges, n)
+    monkeypatch.setattr(graph_algos, "tpch_graph", lambda *_: g)
+    comp = graph_algos.g3_connected_components(spark, str(tmp_path))
     return {r["vid"]: r["comp"] for r in comp.collect()}
 
 
-def test_cc_two_components_and_isolate(spark):
+def test_cc_two_components_and_isolate(spark, monkeypatch, tmp_path):
     # chain 0-1-2-3 (diameter 3), pair 4-5, isolated 6
-    comp = _cc(_graph(spark, [(0, 1), (1, 2), (2, 3), (4, 5)], 7))
+    comp = _cc(
+        spark, monkeypatch, tmp_path, [(0, 1), (1, 2), (2, 3), (4, 5)], 7
+    )
     assert comp == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6}
 
 
-def test_cc_min_id_not_at_edge_endpoint(spark):
+def test_cc_min_id_not_at_edge_endpoint(spark, monkeypatch, tmp_path):
     # min id 0 sits in the middle of a path: 3-1-0-2-4
-    comp = _cc(_graph(spark, [(3, 1), (1, 0), (0, 2), (2, 4)], 5))
+    comp = _cc(
+        spark, monkeypatch, tmp_path, [(3, 1), (1, 0), (0, 2), (2, 4)], 5
+    )
     assert set(comp.values()) == {0}
+
+
+def test_min_supersteps_until_stable_stops_at_fixpoint(spark):
+    # chain 0-1-...-5 with the min label at one end: the fixpoint lands in
+    # round 5, past two 2-round check windows; the next check (round 6)
+    # sees no change and stops far under the budget, with the fixed-round
+    # answer. rounds=0 hands back the input without sending.
+    from flink_neo4j_spark.tuning import iter_kernel, min_supersteps
+
+    und = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)] + [(i + 1, i) for i in range(5)],
+        "a_id long, b_id long",
+    )
+    init = spark.range(6).select(F.col("id").alias("vid"), F.col("id").alias("comp"))
+    sent = []
+
+    def send(c):
+        sent.append(1)
+        return und.join(c.withColumnRenamed("vid", "a_id"), "a_id").select(
+            F.col("b_id").alias("vid"), "comp"
+        )
+
+    def run(rounds, until_stable):
+        sent.clear()
+        with iter_kernel(spark, 10) as k:
+            out = min_supersteps(
+                k, init, send, ["vid"], "comp", rounds, until_stable=until_stable
+            )
+            return sorted(map(tuple, out.collect())), len(sent)
+
+    stable, stable_rounds = run(50, True)
+    fixed, _ = run(5, False)
+    assert stable == fixed == [(v, 0) for v in range(6)]
+    assert stable_rounds == 6
+    assert run(0, False) == (sorted(map(tuple, init.collect())), 0)
 
 
 def test_pagerank_mass_and_ordering(spark, tmp_path, monkeypatch):

@@ -1028,6 +1028,13 @@ PLAN_BUDGETS = {
     # final range sort). A re-derivation of the signature base or a
     # per-block single-task skew regression shows up here first.
     "d8_edit_distance": (1, 14),
+    # the min-superstep kernels over the shared undirected edge table:
+    # measured 0 scans / 2 exchanges (the final sort over the eagerly
+    # checkpointed last round) at sf0.001 and sf0.1; an un-checkpointed
+    # loop or a re-derived edge projection fails here.
+    "g3_connected_components": (1, 4),
+    "g6_bfs_hops": (1, 4),
+    "g13_weighted_sssp": (1, 4),
 }
 
 
